@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.QueryDef
+
 /** Driver-run benchmark: one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR (default sf0.1).
   *
@@ -44,11 +46,12 @@ import org.apache.spark.sql.SparkSession
   * ~2000 characters of the build output and parses the single JSON
   * line out of that tail, so
   *  - stdout gets exactly ONE compact JSON line, printed LAST, with
-  *    per-query keys ABBREVIATED by the table below (full names at
-  *    73+ queries overflow the tail); the per-query map AUTO-FITS its
-  *    budget — full while it fits, else slowest-that-fit + an "oth"
-  *    rollup (composeQueries, unit-gated) — and the line length is
-  *    still asserted < 1800 chars as the final guard;
+  *    per-query keys ABBREVIATED to each query's declared key (full
+  *    names at 73+ queries overflow the tail); the per-query map
+  *    AUTO-FITS its budget — full while it fits, else
+  *    slowest-that-fit + an "oth" rollup (composeQueries, unit-gated)
+  *    — and the line length is still asserted < 1800 chars as the
+  *    final guard;
   *  - the full-precision per-query timings, spreads, and per-run
   *    shuffle-read volumes (`sh_mb` — tallied by a task-end listener,
   *    listener bus drained before each snapshot so attribution is
@@ -62,13 +65,13 @@ import org.apache.spark.sql.SparkSession
   *  - error strings in `failed` have all control chars stripped so the
   *    JSON line can never be broken by a multi-line exception message.
   *
-  * Key abbreviation (documented in README): every declared query has
-  * an explicit <=3-char key — family letter + 2-char mnemonic
-  * ("dedup_minhash"->"dmh", "q_tpch5"->"T5"); the name->key table in
-  * BENCH_DETAIL.json is the authoritative decoder. Prefix fallback
-  * rules cover a query added without an exact entry; uniqueness and
-  * worst-case line length are asserted at test AND run time, so
-  * growth past the tail budget fails loudly before a scored run.
+  * Key abbreviation: each query's [[QueryDef]] carries its
+  * key — an explicit <=3-char key (family letter + 2-char mnemonic,
+  * "dedup_minhash"->"dmh") or, by default, the family-prefix rule
+  * ("q_tpch5"->"T5"); the name->key table in BENCH_DETAIL.json is the
+  * authoritative decoder. Uniqueness and worst-case line length are
+  * asserted at test AND run time, so growth past the tail budget
+  * fails loudly before a scored run.
   *
   * WALL-CLOCK BUDGET (round 14 — the r13 driver bench was killed at
   * the harness's 1-hour timeout with ZERO output, rc 124): the whole
@@ -125,101 +128,6 @@ object Bench {
     def allowRemeasure(estSec: Double): Boolean =
       elapsed + estSec <= 0.95 * budgetSec
   }
-
-  /** Documented stdout key abbreviation (see README): an exact-name
-    * table for the longest query names, then prefix rules. Uniqueness
-    * and worst-case line length over the declared query set are gated
-    * in BenchContractSpec, so a colliding or line-overflowing new
-    * query fails at `sbt test` rather than at bench time. */
-  private val exactKeys = Map(
-    "ann_brute" -> "ab", "ann_brute_agg" -> "ag", "ann_ivf" -> "ai",
-    "ann_ivf_index" -> "ax", "ann_ivfpq" -> "ap", "ann_ivfpq_index" -> "apx",
-    "ann_lsh" -> "al", "ann_lsh_mp" -> "am", "ann_pq" -> "aq",
-    "dedup_canonical" -> "dcn", "dedup_clusters" -> "dcc", "dedup_clusters_exact" -> "dcx",
-    "dedup_embedding" -> "dem", "dedup_exact" -> "dex", "dedup_incremental" -> "dic",
-    "dedup_minhash" -> "dmh", "dedup_ngram_jaccard" -> "dng", "dedup_semantic" -> "dse",
-    "dedup_simhash" -> "dsh", "dedup_substrings" -> "dsu", "multimodal_decode" -> "mde",
-    "multimodal_features" -> "mft", "multimodal_frames" -> "mfr", "multimodal_meta" -> "mmt",
-    "multimodal_phash" -> "mph", "multimodal_resize" -> "mrs", "pipeline_curate" -> "pcu",
-    "pipeline_curate_neardup" -> "pcn", "pipeline_decon_bloom" -> "pdb", "pipeline_decontaminate" -> "pde",
-    "pipeline_full" -> "pfl", "pipeline_mix" -> "pmx", "pipeline_pack" -> "ppk",
-    "pipeline_pack_global" -> "ppg", "pipeline_pack_blocks" -> "ppb",
-    "pipeline_pack_greedy" -> "ppy", "pipeline_pack_padding" -> "ppd",
-    "pipeline_epoch_shuffle" -> "pes", "pipeline_curriculum" -> "pcl",
-    "pipeline_pack_incr" -> "ppi", "pipeline_mix_pack" -> "pmp",
-    "pipeline_soft_dedup" -> "psd", "pipeline_fim_spans" -> "pfs",
-    "pipeline_curriculum_anneal" -> "pan", "pipeline_pack_export" -> "ppe",
-    "pipeline_shard" -> "psh", "q1_agg" -> "q1", "q_anomaly" -> "ano",
-    "q_anti_join" -> "ajo", "q_approx_agg" -> "axg", "q_array_agg" -> "arr",
-    "q_asof_join" -> "aj", "q_asof_join_native" -> "ajn", "q_attribution" -> "att",
-    "q_attribution_last" -> "atl", "q_bucketed_join" -> "bkj", "q_case_expr" -> "cse",
-    "q_cast_agg" -> "cag", "q_chunk" -> "chk", "q_chunk_tokens" -> "ckt",
-    "q_count_distinct" -> "ctd", "q_cube" -> "cub", "q_date_agg" -> "dag",
-    "q_datetime_funcs" -> "dtf", "q_distinct" -> "dst", "q_event_compact" -> "ecp",
-    "q_events_hourly" -> "ehr", "q_events_json" -> "ejs", "q_events_resample" -> "ers",
-    "q_events_sliding" -> "esl", "q_exact_median" -> "emd", "q_except" -> "exc",
-    "q_explode" -> "xpl", "q_filter_project" -> "fpj", "q_full_outer" -> "fou",
-    "q_funnel" -> "fnl", "q_fuzzy_join" -> "fzj", "q_gopher_quality" -> "gop",
-    "q_grouping_sets" -> "gst", "q_having" -> "hav", "q_histogram" -> "hst",
-    "q_hll_distinct" -> "hll", "q_intersect" -> "isc", "q_join_agg" -> "jag",
-    "q_join_broadcast" -> "jbc", "q_lambda_funcs" -> "hof", "q_lang_confusion" -> "lcm",
-    "q_limit_topk" -> "tpk", "q_math_funcs" -> "mth", "q_null_semantics" -> "nul",
-    "q_outer_join" -> "ojn", "q_part_join" -> "pjn", "q_partitioned_read" -> "prr",
-    "q_pivot" -> "pvt", "q_profile" -> "prf", "q_quantile_bucket" -> "qbk",
-    "q_quantile_global" -> "qgl", "q_range_join" -> "rjn", "q_rollup" -> "rup",
-    "q_salted_agg" -> "sal", "q_sample" -> "smp", "q_sample_replace" -> "smr",
-    "q_scalar_subquery" -> "sbq", "q_scd2" -> "sc2", "q_semi_join" -> "sjn",
-    "q_session_window" -> "swn", "q_sessionize" -> "ses", "q_skew_join" -> "skj",
-    "q_sql_path" -> "sqp", "q_stats" -> "sts", "q_string_agg" -> "sag",
-    "q_topk_agg" -> "tka", "q_tpch10" -> "T10", "q_tpch13" -> "T13",
-    "q_tpch14" -> "T14", "q_tpch15" -> "T15", "q_tpch17" -> "T17",
-    "q_tpch18" -> "T18", "q_tpch19" -> "T19", "q_tpch22" -> "T22",
-    "q_tpch3" -> "T3", "q_tpch4" -> "T4", "q_tpch5" -> "T5",
-    "q_tpch6" -> "T6", "q_tpch7" -> "T7", "q_tpch8" -> "T8",
-    "q_tvt_split" -> "tvt", "q_union" -> "uni", "q_union_all" -> "ual",
-    "q_upsert" -> "ups", "q_weighted_sample" -> "wsm", "q_weighted_stratified" -> "wst",
-    "q_window_analytics" -> "wan", "q_window_range" -> "wrg", "q_window_running" -> "wrn",
-    "q_window_topk" -> "wtk", "q_zorder_read" -> "zor", "text_bm25" -> "tbm",
-    "text_bpe_tokens" -> "tbp", "text_fingerprint" -> "tfp", "text_heavy_hitters" -> "thh",
-    "text_langid" -> "tlg", "text_ngram_freq" -> "tng", "text_pii" -> "tpi",
-    "text_quality" -> "tqu", "text_repetition" -> "trp", "text_tfidf_top" -> "ttf",
-    "text_token_count" -> "ttk", "pipeline_budget" -> "pbu",
-    "text_vocab_coverage" -> "tvo", "q_map_funcs" -> "mpf",
-    "graph_pagerank" -> "gpr", "q_corpus_diff" -> "cdf",
-    "q_mixture_kl" -> "mkl", "q_incr_agg" -> "icg",
-    "q_skew_profile" -> "skp", "text_html_strip" -> "ths",
-    "dedup_substrings_hashed" -> "dsz", "text_bpe_train" -> "tbt",
-    "text_bpe_encode" -> "tbe", "pipeline_mix_temperature" -> "pmt",
-    "q_chunk_bpe" -> "ckb", "pipeline_quality_classifier" -> "pqc",
-    "pipeline_decon_semantic" -> "pds", "q_table_stats" -> "tst",
-    "pipeline_lm_ppl" -> "plm", "q_schema_evolution" -> "sev",
-    "text_cms_counts" -> "tcm", "ann_hard_negatives" -> "ahn",
-    "q_powerlaw_alpha" -> "pla", "ann_eval_metrics" -> "aev",
-    "q_quantile_exact" -> "qet", "pipeline_dsir" -> "pdr",
-    "dedup_span_excise" -> "dsx", "ann_pca" -> "apc",
-    "dedup_span_maximal" -> "dsm", "dedup_span_stats" -> "dsp",
-    "ann_pca_prefilter" -> "apf", "text_unigram_train" -> "tut",
-    "text_unigram_encode" -> "tux", "q_robust_stats" -> "rbs",
-    "q_cohort_retention" -> "coh", "q_kmv_overlap" -> "kmv",
-    "text_skipgram_pairs" -> "tsg", "q_hilbert_read" -> "hil",
-    "dedup_suffix_lrs" -> "sfx", "dedup_suffix_spans" -> "dss",
-    "pipeline_decon_multi" -> "pdm", "q_chunk_overlap" -> "cko",
-    "pipeline_pack_spans" -> "pps", "ann_class_stats" -> "acs",
-    "dedup_minhash_portable" -> "dmp", "graph_triangles" -> "gtr",
-    "text_inverted_index" -> "tix", "text_wordpiece_train" -> "twt",
-    "text_wordpiece_encode" -> "twe", "dedup_setsim_exact" -> "dpj",
-    "dedup_segments" -> "dsg", "q_resample_ffill" -> "rff",
-    "graph_communities" -> "gcm", "dedup_simhash_portable" -> "dhp",
-    "text_phrase_search" -> "tps", "text_kneser_ney" -> "tkn",
-    "text_tokenizer_eval" -> "tte", "text_tokenizer_drift" -> "ttd",
-    "q_manifest_diff" -> "mdf",
-    "pipeline_ingest" -> "pig", "pipeline_ingest_incr" -> "pgi",
-    "pipeline_ingest_stream" -> "pgs", "pipeline_ingest_drift" -> "pgd",
-    "dedup_clusters_portable" -> "dcp", "pipeline_t5_spans" -> "pt5",
-    "pipeline_cluster_balance" -> "pcb", "text_vocab_prune" -> "tvp",
-    "pipeline_ul2_spans" -> "pu2", "pipeline_decon_excise" -> "pdx",
-    "pipeline_data_card" -> "pdd",
-    "pipeline_crawl_robots" -> "pcr", "pipeline_crawl_neardup" -> "pcd")
 
   /** 2-decimal seconds with trailing zeros stripped ("0.20" -> "0.2",
     * "1.00" -> "1") — still valid JSON numbers, ~0.5 chars/query saved. */
@@ -280,14 +188,13 @@ object Bench {
       cap: Int = 24): String =
     keys.take(cap).map("\"" + _ + "\"").mkString("[", ",", "]")
 
+  /** Stdout key of a declared query: the one its [[QueryDef]] carries
+    * (an explicit key, else the family-prefix rule). Uniqueness and
+    * worst-case line length over the declared query set are gated in
+    * BenchContractSpec, so a colliding or line-overflowing new query
+    * fails at `sbt test` rather than at bench time. */
   private[graft] def shortKey(name: String): String =
-    exactKeys.getOrElse(name, Seq(
-      "q_window_" -> "w_", "q_events_" -> "e_", "q_tpch" -> "T",
-      "dedup_" -> "d_", "text_" -> "t_", "ann_" -> "a_",
-      "multimodal_" -> "m_", "pipeline_" -> "p_", "q_" -> "")
-      .collectFirst { case (p, r) if name.startsWith(p) =>
-        r + name.stripPrefix(p) }
-      .getOrElse(name))
+    QueryDef.byName(name).key
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

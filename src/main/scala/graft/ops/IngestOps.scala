@@ -336,8 +336,9 @@ object IngestOps {
     * text; s4 = optional n-gram decontamination against `evalGrams`
     * (a one-column frame of gram strings `g`). */
   /** `sourceFiles` (r15) lists the files behind the ACTUAL leaf frames
-    * composed into the stage plans — the batch's own files plus the
-    * two inventory dirs (plus nothing else, by construction). It is
+    * composed into the stage plans — the batch's own files, the two
+    * inventory dirs and the files behind `evalGrams` (plus nothing
+    * else, by construction). It is
     * the loop's per-batch no-corpus-text-read audit surface: reading
     * it here costs four trivial-plan `inputFiles` calls instead of the
     * full-chain analysis the loop previously re-planned per batch
@@ -434,7 +435,8 @@ object IngestOps {
         s3.join(hot, Seq(idCol), "left_anti")
     }
     IngestStages(s1, s2, s3, s4,
-      (batch.inputFiles ++ invM.inputFiles ++ invS.inputFiles).distinct)
+      (batch.inputFiles ++ invM.inputFiles ++ invS.inputFiles ++
+        evalGrams.toSeq.flatMap(_.inputFiles)).distinct)
   }
 
   /** MERGE an accepted batch (its FINAL stored text) into the

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   *
   * Design: the same column expressions serve batch and streaming
   * (Spark's unified model), so every streaming transform here has a
-  * batch-equivalent query in SparkEntry that the DuckDB oracle checks;
+  * batch-equivalent query in graft.queries that the DuckDB oracle checks;
   * streaming-specific semantics (watermarks, state timeouts) are
   * covered by ScalaTest with a file source + memory sink.
   *

@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.QueryDef
+
 /** Every declared query must run and return rows on sf0.001 — the same
   * smoke the driver applies, kept in-tree so a regression is caught at
   * `sbt test` time rather than at round scoring. */
@@ -10,9 +12,16 @@ class QueriesSmokeSpec extends SparkSpec {
     }
   }
 
-  test("every oracle key has a matching query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle entries without queries: $orphans")
+  test("registry: unique names and keys, exactly three rows-only queries") {
+    val all = QueryDef.all
+    val names = all.map(_.name)
+    assert(names.distinct.length == names.length,
+      s"duplicate query names: ${names.diff(names.distinct)}")
+    val keys = all.map(_.key)
+    assert(keys.distinct.length == keys.length,
+      s"duplicate short keys: ${keys.diff(keys.distinct)}")
+    assert(all.filter(_.oracle.isEmpty).map(_.name).toSet ==
+      Set("q_approx_agg", "q_hll_distinct", "q_sample"))
   }
 
   test("tpch flagship plans: pushed filters, broadcast dims, top-k without a full sort") {

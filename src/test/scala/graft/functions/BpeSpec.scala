@@ -10,7 +10,7 @@ import graft.ops.BpeOps
   * with the BpeOps/BpeKernels implementations beyond the pre-token
   * regex) that must agree exactly, plus the classic hand corpus from
   * the subword-nmt paper and a codegen plan gate. Since round 9 the
-  * merge loop ALSO has a DuckDB oracle (SparkEntry
+  * merge loop ALSO has a DuckDB oracle (TextQueries
   * `bpeTrainOracleSql` re-learns the table from the raw corpus);
   * this spec stays the Scala-side anchor and covers the encode
   * kernel's codegen path, which no SQL can. */

@@ -53,6 +53,21 @@ class IngestOpsSpec extends SparkSpec {
     assert(!files.exists(_.contains("documents.parquet")),
       "second batch must not re-scan stored corpus text")
 
+    // --- the loop's audit surface covers every file the composed plan
+    // reads, a file-backed evalGrams included ---
+    val evalDir = java.nio.file.Files.createTempDirectory("graft-evalgrams")
+      .toString
+    Seq("zz yy xx").toDF("g").write.mode("overwrite").parquet(evalDir)
+    val stE = IngestOps.ingestBatch(spark, key, batchB, "doc_id", "text",
+      evalGrams = Some(spark.read.parquet(evalDir)))
+    val planFiles = stE.s4.inputFiles
+    assert(planFiles.exists(_.contains(evalDir)),
+      "the evalGrams parquet should appear in the composed plan")
+    assert(planFiles.toSet.subsetOf(stE.sourceFiles.toSet),
+      "sourceFiles misses files the plan reads: " +
+        planFiles.filterNot(stE.sourceFiles.contains).mkString(", "))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(evalDir))
+
     // --- a batch doc whose text equals a stored doc dies in stage 1
     // against the MERGED inventory (accepted clean text is stored) ---
     val firstClean = acceptedA.orderBy(col("doc_id")).select(col("clean"))
